@@ -13,6 +13,28 @@ import os
 from pyspark.sql import SparkSession, functions as F
 
 
+#: Size of Spark's LRU cache of compiled generated classes (the static
+#: conf ``spark.sql.codegen.cache.maxEntries``, default 100). A pass of
+#: the ``topic_curate`` benchmark (topic verbs plus the extended curate
+#: pipeline) uses about 215 distinct classes; at the default every repeat
+#: pass compiled 210 of them again, and every ``stream_epochs`` epoch 55.
+#: Each recompile is a new JVM class that starts interpreted and is
+#: JIT-compiled again. Compiles per repeat ``topic_curate`` pass (4 cores,
+#: Spark 4.1.2): 53-64 at 250 entries, 4 at 500 and at 1000; 1000 leaves
+#: room for larger plans. The 4 left (2 per epoch) are 2 per
+#: ``fs_topic.produce`` call, whose ``current_timestamp()`` is inlined as
+#: a literal and so mints new classes each call; the LRU evicts them first.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, at most 48g."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(next(line for line in f
+                            if line.startswith("MemTotal:")).split()[1])
+    return f"{min(48 * 1024, total_kb // 4096)}m"
+
+
 def get_spark(
     app_name: str = "kafi_spark",
     shuffle_partitions: int | None = None,
@@ -20,14 +42,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the session.
 
+    ``SPARK_GRAFT_CPUS`` (default: the CPUs this process may use) sets
+    ``local[N]``; ``KAFI_SPARK_DRIVER_MEM`` (default: a quarter of
+    physical memory, at most 48g) the driver heap.
+
     ``spark.sql.shuffle.partitions`` defaults to the local core count: at
-    local[32] and the test scale factors, 32 post-shuffle partitions keep
+    the test scale factors, one post-shuffle partition per core keeps
     every partition in memory; on a real cluster AQE coalescing makes the
     static number mostly irrelevant (it only caps initial parallelism).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
+    driver_mem = (os.environ.get("KAFI_SPARK_DRIVER_MEM")
+                  or _default_driver_mem())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -46,13 +75,18 @@ def get_spark(
         # and broadcast-joined frames where no AQE knob applies.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("KAFI_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # wide-aggregate plans generate large classes; with the JVM default
         # 240m code cache the JIT shuts off mid-session and later queries
         # run interpreted (observed 10-30x slowdowns). 1g + flushing keeps
-        # compilation alive for long-lived sessions.
+        # compilation alive for long-lived sessions. On the topic_curate
+        # benchmark (4 cores, Spark 4.1.2) the code heaps (sum of the
+        # CodeHeap* pools) held 90-91 MB after 7 passes at either codegen
+        # cache size, and metaspace grew about 1 MB a pass to 172-173 MB.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
@@ -103,16 +137,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read the driver's parquet tables and register temp views.
-
-    Returns a dict name -> DataFrame. Plain ``spark.read.parquet`` so filters
-    and projections push down to the scan.
-    """
-    out = {}
-    for name in names:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -299,11 +299,16 @@ def _load_fp_state(spark, state_dir: str, exclude_version: str,
     pre-r13 engines (string md5 fps) are not readable by this version;
     the exact-dedup stream's TEXT fingerprints stay md5 strings (they
     twin the batch ``text_stats`` fingerprint column, which the oracle
-    replays) and pass ``fp_type="string"``."""
+    replays) and pass ``fp_type="string"``.
+
+    The read schema is pinned: no footer-sampling inference job per
+    epoch, narrower integer deltas upcast to ``fp_type``, and a legacy
+    string-fp dir fails at read time instead of null-casting its fps."""
     from kafi_spark.functions.state import load_deltas
 
     df = load_deltas(spark, state_dir, exclude_version,
-                     empty_schema=f"__fp {fp_type}")
+                     empty_schema=f"__fp {fp_type}",
+                     schema=f"__fp {fp_type}, v string")
     return df.select("__fp").distinct()
 
 

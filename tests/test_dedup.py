@@ -408,7 +408,6 @@ def test_curate_documents_extended_stage_composition(spark, sf_dir):
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base_ids = {r.doc_id for r in curate_documents(df).collect()}
-    assert {r.doc_id for r in curate_documents_extended(df).collect()} == base_ids
 
     ev = df.filter("doc_id < 5").select("doc_id", "text")
     decon_ids = {r.doc_id
@@ -422,6 +421,16 @@ def test_curate_documents_extended_stage_composition(spark, sf_dir):
     assert full.columns == ["doc_id", "n_tokens", "quality", "lm_score"]
     assert 0 < len(rows) <= len(base_ids) + len(base_ids)  # sane bound
     assert all(r.lm_score >= -20.0 for r in rows)
+
+    # the no-option run repeats the base plan after ~200 distinct
+    # generated classes ran; its ~70 classes must still be in the
+    # session's codegen cache (at Spark's default size of 100, about 30
+    # of them were compiled again)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    before = compiled.getCount()
+    assert {r.doc_id for r in curate_documents_extended(df).collect()} == base_ids
+    assert compiled.getCount() - before <= 5
 
 
 def test_curate_documents_extended_classifier_gate(spark, sf_dir):

@@ -327,6 +327,24 @@ def test_span_dedup_stream_epoch_replay_idempotent(spark, tmp_path):
     assert got == [2]  # "a b" dropped, "z z" fresh
 
 
+def test_fp_state_loads_mixed_width_deltas(spark, tmp_path):
+    """A state dir holding an int ``__fp`` delta next to bigint ones (a
+    narrower writer) loads as bigint with every value: the read schema
+    is pinned, so the int file is upcast instead of failing the scan."""
+    from kafi_spark.streaming.stateful import _load_fp_state
+
+    state = tmp_path / "state"
+    spark.createDataFrame([(1,), (2,)], "__fp int").write.parquet(
+        str(state / "v=0"))
+    spark.createDataFrame([(2,), (1 << 40,)], "__fp bigint").write.parquet(
+        str(state / "v=1"))
+    spark.createDataFrame([(7,)], "__fp bigint").write.parquet(
+        str(state / "v=2"))
+    seen = _load_fp_state(spark, str(state), "2")
+    assert seen.dtypes == [("__fp", "bigint")]
+    assert sorted(r[0] for r in seen.collect()) == [1, 2, 1 << 40]
+
+
 def test_decontaminate_stream_matches_batch(spark, sf_dir):
     """Stateless twin: per-document verdicts identical to the batch
     operator under any micro-batch split."""
